@@ -151,12 +151,16 @@ def test_validate_turtle_export(spark, tmp_path):
 
 
 def test_run_pipeline_resume(spark, tmp_path, monkeypatch):
-    """Reference staged-resume semantics (run_umls_pipeline.py:74-101):
-    a run that dies after ontology 1 of 2 restarts without
-    re-exporting ontology 1; resume=False redoes everything."""
+    """Reference staged-resume semantics (run_umls_pipeline.py:74-101)
+    around the batch writer: a batch that fails mid-write marks no
+    step and leaves no document; an entry marked done is not
+    re-exported, the remaining entry is exported on resume;
+    resume=False redoes everything."""
     import pytest
+    from pyspark.sql import functions as F
 
     import umls2rdf_spark.pipeline as pl
+    import umls2rdf_spark.rdf.ontology as ont
 
     d = _fixture_rrf_dir(tmp_path)
     # second ontology: one atom + MRSAB row for DEMO2
@@ -175,36 +179,64 @@ def test_run_pipeline_resume(spark, tmp_path, monkeypatch):
     out_dir = str(tmp_path / "rout")
     conf = "DEMO,DEMO.ttl,load_on_codes\nDEMO2,DEMO2.ttl,load_on_codes\n"
 
-    real_write = pl.write_ontology
-    calls: list[str] = []
+    real_write = pl.write_documents
+    batches: list[list[str]] = []
 
-    def dying_write(tables, code, *a, **kw):
-        if code == "DEMO2":
-            raise RuntimeError("killed mid-pipeline")
-        calls.append(code)
-        return real_write(tables, code, *a, **kw)
+    def recording_write(docs, paths, *a, **kw):
+        batches.append(sorted(os.path.basename(p) for p in paths))
+        return real_write(docs, paths, *a, **kw)
 
-    monkeypatch.setattr(pl, "write_ontology", dying_write)
-    with pytest.raises(RuntimeError, match="killed"):
+    monkeypatch.setattr(pl, "write_documents", recording_write)
+
+    # a write task dies on DEMO2's rows (document 1 of the batch)
+    real_assemble = ont.assemble_document
+
+    def dying_assemble(doc, ordered):
+        out = real_assemble(doc, ordered)
+        return out.withColumn("ttl", F.when(
+            F.col("doc") == 1, F.raise_error(F.lit("killed mid-write"))
+        ).otherwise(F.col("ttl")))
+
+    monkeypatch.setattr(ont, "assemble_document", dying_assemble)
+    with pytest.raises(Exception, match="killed mid-write"):
         run_pipeline(tables, conf, out_dir)
-    assert calls == ["DEMO"]
+    assert batches == [["DEMO.ttl", "DEMO2.ttl", "umls_semantictypes.ttl"]]
+    assert pl.load_state(out_dir)["steps"] == {}
+    assert os.listdir(out_dir) == []  # no .ttl, no staging left behind
+    monkeypatch.setattr(ont, "assemble_document", real_assemble)
+
+    # an earlier run exported DEMO only
+    run_pipeline(tables, "DEMO,DEMO.ttl,load_on_codes\n", out_dir)
     state = pl.load_state(out_dir)
     assert "ontology:DEMO:DEMO.ttl" in state["steps"]
     assert "ontology:DEMO2:DEMO2.ttl" not in state["steps"]
 
-    def counting_write(tables, code, *a, **kw):
-        calls.append(code)
-        return real_write(tables, code, *a, **kw)
-
-    monkeypatch.setattr(pl, "write_ontology", counting_write)
     exported = run_pipeline(tables, conf, out_dir)
     assert set(exported) == {"DEMO", "DEMO2"}
-    # DEMO was NOT re-exported on resume
-    assert calls == ["DEMO", "DEMO2"]
+    # DEMO was NOT re-exported on resume; DEMO2 was
+    assert batches[-1] == ["DEMO2.ttl"]
+    demo2 = "".join(
+        open(f).read()
+        for f in sorted(glob.glob(os.path.join(out_dir, "DEMO2.ttl", "part-*")))
+    )
+    assert 'skos:prefLabel """Second source concept"""@en' in demo2
+    assert "ontology:DEMO2:DEMO2.ttl" in pl.load_state(out_dir)["steps"]
 
     # resume=False redoes every stage
     exported = run_pipeline(tables, conf, out_dir, resume=False)
-    assert calls == ["DEMO", "DEMO2", "DEMO", "DEMO2"]
+    assert batches[-1] == ["DEMO.ttl", "DEMO2.ttl", "umls_semantictypes.ttl"]
+
+    # a lost semantic-types document is rewritten alone, unchanged
+    sem_dir = os.path.join(out_dir, "umls_semantictypes.ttl")
+    sem = "".join(open(f).read() for f in sorted(glob.glob(sem_dir + "/part-*")))
+    import shutil
+
+    shutil.rmtree(sem_dir)
+    run_pipeline(tables, conf, out_dir)
+    assert batches[-1] == ["umls_semantictypes.ttl"]
+    assert sem == "".join(
+        open(f).read() for f in sorted(glob.glob(sem_dir + "/part-*"))
+    )
 
 
 def test_strict_validator_catches_balanced_garbage(spark, tmp_path):

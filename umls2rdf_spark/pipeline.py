@@ -2,10 +2,12 @@
 __main__ (umls2rdf.py:828-896) and umls.conf format.
 
 The reference iterates umls.conf serially, loading each ontology into
-driver RAM; here each ontology export is an independent Spark job over
-the shared (cached) table scans. A user of the reference can point
-this at the same conf text and RRF/parquet inputs and get the same
-set of .ttl outputs.
+driver RAM; here every pending conf entry and the semantic-types
+document are exported by ONE Spark plan keyed on (document, class)
+and written by one partitioned write, so the RRF tables are scanned
+once per run instead of once per entry. A user of the reference can
+point this at the same conf text and RRF/parquet inputs and get the
+same set of .ttl outputs.
 """
 
 from __future__ import annotations
@@ -16,15 +18,22 @@ import tempfile
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from umls2rdf_spark.rdf.ontology import (
-    mrsab_record,
-    semantic_types_lines,
+    OntologySpec,
+    mrsab_records,
+    ontology_documents,
+    write_documents,
     write_ontology,
 )
-from umls2rdf_spark.rdf.turtle import PREFIXES
 from umls2rdf_spark.sources.rrf import read_rrf
+
+# write_ontology (the one-entry export) stays importable from here
+__all__ = [
+    "DEFAULT_BASE_URI", "ConfEntry", "parse_conf", "load_umls_tables",
+    "load_state", "save_state", "mark_steps_complete", "run_pipeline",
+    "write_ontology",
+]
 
 DEFAULT_BASE_URI = "http://purl.bioontology.org/ontology/"
 
@@ -107,11 +116,12 @@ def save_state(output_dir: str, state: dict) -> None:
     os.replace(tmp_path, path)
 
 
-def mark_step_complete(
-    output_dir: str, state: dict, step: str, details: dict
+def mark_steps_complete(
+    output_dir: str, state: dict, steps: dict[str, dict]
 ) -> None:
-    """run_umls_pipeline.py:99-101: record + persist after each step."""
-    state["steps"][step] = details
+    """run_umls_pipeline.py:99-101: record + persist completed steps
+    (one atomic state write for a whole batch)."""
+    state["steps"].update(steps)
     save_state(output_dir, state)
 
 
@@ -126,21 +136,20 @@ def run_pipeline(
 ) -> dict[str, str]:
     """Export every configured ontology + the semantic-types file.
 
-    Mirrors __main__ (umls2rdf.py:828-896): semantic types document
-    first, then one .ttl per conf entry, honoring alt URI codes,
-    load_on_cuis, the MSH tree special case (inside write_ontology)
-    and the PROCESS_ONLY_CURRENT_UMLS_VERSION skip. Returns
-    {ont_code: output_path} for what was exported or resumed.
+    Mirrors __main__ (umls2rdf.py:828-896): one .ttl per conf entry
+    plus umls_semantictypes.ttl, honoring alt URI codes, load_on_cuis,
+    the MSH tree special case and the PROCESS_ONLY_CURRENT_UMLS_VERSION
+    skip. MRSAB is collected once. Returns {ont_code: output_path} for
+    what was exported or resumed.
 
     Staged-resume semantics (reference run_umls_pipeline.py:74-101):
-    each completed export is recorded in ``pipeline_state.json``
-    (atomic replace) keyed by step name; with ``resume=True`` a
-    restarted run skips steps whose state entry exists AND whose
-    output still exists — a 60-ontology export that dies at #40
-    redoes only #40 onward, not the 39 finished Spark jobs.
-    ``resume=False`` ignores and rewrites prior state.
+    completed documents are recorded in ``pipeline_state.json``
+    (atomic replace) keyed by step name. With ``resume=True``, entries
+    already marked done (state entry present AND output still there)
+    are skipped; the pending entries are written as one batch, and a
+    failure inside it marks none of them. ``resume=False`` ignores and
+    rewrites prior state.
     """
-    spark = tables["MRCONSO"].sparkSession
     os.makedirs(output_dir, exist_ok=True)
     state = load_state(output_dir) if resume else {
         "state_version": STATE_VERSION, "steps": {}
@@ -155,28 +164,17 @@ def run_pipeline(
             )
         )
 
-    if "MRSTY" in tables:
-        sem_path = os.path.join(output_dir, "umls_semantictypes.ttl")
-        if not done("semantic_types", sem_path):
-            sem = semantic_types_lines(tables["MRSTY"], with_roots=True)
-            head = spark.createDataFrame(
-                [("0", PREFIXES)], "sort_key string, line string"
-            )
-            doc = head.unionByName(sem.select("sort_key", "line"))
-            doc.orderBy("sort_key").select("line").write.mode(
-                "overwrite"
-            ).text(sem_path)
-            mark_step_complete(
-                output_dir, state, "semantic_types", {"output": sem_path}
-            )
-
+    entries = parse_conf(conf_text)
+    records = (
+        mrsab_records(tables["MRSAB"], [e.umls_code for e in entries])
+        if "MRSAB" in tables
+        else {}
+    )
     exported: dict[str, str] = {}
-    for entry in parse_conf(conf_text):
-        rec = (
-            mrsab_record(tables["MRSAB"], entry.umls_code)
-            if "MRSAB" in tables
-            else None
-        )
+    specs: list[OntologySpec] = []
+    pending: list[tuple[str, str]] = []  # (step, output path) per doc
+    for entry in entries:
+        rec = records.get(entry.umls_code)
         if only_current_version and (
             not rec or rec.get("IMETA") != umls_version
         ):
@@ -191,17 +189,21 @@ def run_pipeline(
         # trailing slash is part of the ontology resource IRI emitted
         # in the document header.
         ns = umls_base_uri + (entry.alt_uri_code or entry.umls_code) + "/"
-        write_ontology(
-            tables,
-            entry.umls_code,
-            ns,
-            out_path,
-            lat=lat,
-            load_on_cuis=entry.load_on_cuis,
-            umls_version=umls_version,
-        )
-        mark_step_complete(
-            output_dir, state, step, {"output": out_path}
-        )
+        specs.append(OntologySpec.from_conf(
+            entry.umls_code, ns, lat, entry.load_on_cuis, rec, umls_version
+        ))
+        pending.append((step, out_path))
         exported[entry.umls_code] = out_path
+
+    sem_path = os.path.join(output_dir, "umls_semantictypes.ttl")
+    sem_pending = "MRSTY" in tables and not done("semantic_types", sem_path)
+    if sem_pending:
+        pending.append(("semantic_types", sem_path))
+    if pending:
+        docs = ontology_documents(tables, specs, semantic_types_doc=sem_pending)
+        write_documents(docs, [path for _, path in pending])
+        mark_steps_complete(
+            output_dir, state,
+            {step: {"output": path} for step, path in pending},
+        )
     return exported

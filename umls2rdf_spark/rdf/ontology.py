@@ -2,12 +2,20 @@
 
 This is the Spark rebuild of the reference's whole pipeline
 (UmlsOntology at umls2rdf.py:536, UmlsClass.toRDF at umls2rdf.py:391):
-the reference loads every table into driver RAM and loops over codes;
-here each per-class component (preferred label, alt labels,
-definitions, resolved relations, attributes, semantic types, root
-flags) is an independent aggregation joined on the class code, and the
-Turtle block is rendered by a single projection — so a 100 TB UMLS-
-shaped corpus exports with ~6 shuffles total, all on the class key.
+the reference loads every table into driver RAM and loops over codes,
+one source (SAB) at a time; here every configured source is exported
+by the same plan. Each row carries a document index ``doc`` (one per
+umls.conf entry), every aggregate and join is keyed on (doc, class
+key), and the per-entry settings (CODE-vs-CUI key, language, namespace,
+hierarchy, the MSH tree and MN-root rule, the ICD10CM root patch)
+become per-row columns or driver-built literal maps. MRCONSO, MRREL,
+MRSAT and MRDEF are scanned the same number of times for one entry as
+for sixty, and the job count does not grow with the number of entries.
+Measured on the four-source benchmark release (50k concepts), the
+executed plan of the whole export holds 18 shuffle Exchanges (every
+aggregate and join keyed on (doc, class key), the document sort, the
+small MRSTY / MRRANK / MRDOC / root sides) and 6 MRCONSO scans; the
+per-source plans it replaces held 20-22 shuffle Exchanges each.
 
 Rendering mirrors the reference byte-for-byte where the reference is
 deterministic; where it depends on MySQL row order (tie-breaks among
@@ -17,6 +25,12 @@ each function).
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+from dataclasses import dataclass
+from typing import Callable, Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -25,7 +39,7 @@ from umls2rdf_spark.rdf.turtle import (
     HAS_CUI,
     HAS_STY,
     HAS_TUI,
-    STY_URL,
+    PREFIXES,
     class_header,
     lang_literal_list,
     literal_triple,
@@ -37,7 +51,14 @@ from umls2rdf_spark.rdf.turtle import (
 # Bogus hierarchy parents skipped by the reference (umls2rdf.py:438-446).
 BOGUS_PARENTS = ("ICD-10-CM", "138875005", "V-HL7V3.0", "C1553931")
 
+# ICD10CM's patched root parent (umls2rdf.py:706-708, code mode only).
+ICD10CM_ROOT_CUI = "C3264380"
+
 _OWL_THING_SUB = "\trdfs:subClassOf owl:Thing ;\n"
+
+# semantic_types_lines sort keys of the owl:Thing root lines end with
+# this suffix (they sort after a TUI's edges)
+_STY_ROOT_SUFFIX = ":~"
 
 # write_properties always declares hasSTY before the MRDOC-derived
 # properties (umls2rdf.py:801-811); template is toRDFWithDesc
@@ -50,134 +71,207 @@ HASSTY_PROPERTY_BLOCK = (
 )
 
 
-def filter_atoms(
-    mrconso: DataFrame, ont_code: str, lat: str, load_on_cuis: bool
-) -> DataFrame:
-    """MRCONSO scan for one ontology: SAB/LAT/SUPPRESS filters pushed
-    to the source (load_tables at umls2rdf.py:598-605), plus the class
-    key column (CODE or CUI, get_code at umls2rdf.py:142)."""
+@dataclass(frozen=True)
+class OntologySpec:
+    """Settings of one exported document (one umls.conf entry).
+
+    ``code`` is the SAB, ``ns`` the namespace IRI, ``lat`` the MRCONSO
+    language kept, ``load_on_cuis`` keys classes by CUI instead of
+    CODE, ``hierarchy`` renders CHD rels as rdfs:subClassOf,
+    ``mesh_tree`` takes parents from the MeSH tree (plus the MN-root
+    rule), ``header`` is the rendered prefixes + ontology header."""
+
+    code: str
+    ns: str
+    lat: str = "eng"
+    load_on_cuis: bool = False
+    hierarchy: bool = True
+    mesh_tree: bool = False
+    header: str = ""
+
+    @classmethod
+    def from_conf(
+        cls,
+        code: str,
+        ns: str,
+        lat: str,
+        load_on_cuis: bool,
+        mrsab_row: dict | None,
+        umls_version: str = "2025AB",
+    ) -> "OntologySpec":
+        """A conf entry's document: the reference's per-SAB rules
+        (umls2rdf.py:874-880 — MSH takes its parents from the mesh
+        tree, with hierarchy off) and its header from the MRSAB row."""
+        return cls(
+            code, ns, lat, load_on_cuis, hierarchy=code != "MSH",
+            mesh_tree=code == "MSH",
+            header=PREFIXES + ontology_header(mrsab_row, code, ns, umls_version),
+        )
+
+    @property
+    def lang(self) -> str:
+        return UMLS_LANGCODE_MAP[self.lat.lower()]
+
+
+def _specs(
+    ontologies: str | Sequence[OntologySpec],
+    ns: str | None,
+    lat: str,
+    load_on_cuis: bool,
+    hierarchy: bool,
+    mesh_tree: bool,
+) -> list[OntologySpec]:
+    """A batch of specs, or the one-entry batch of a single SAB."""
+    if isinstance(ontologies, str):
+        return [
+            OntologySpec(
+                ontologies, ns or "", lat, load_on_cuis, hierarchy, mesh_tree
+            )
+        ]
+    return list(ontologies)
+
+
+def _per_doc(values: list) -> Column:
+    """A per-document setting (``values[doc]``) as a column of ``doc``:
+    a literal when every document agrees, else a driver-built literal
+    map lookup."""
+    if len(set(values)) == 1:
+        return F.lit(values[0])
+    pairs = [F.lit(x) for i, v in enumerate(values) for x in (i, v)]
+    return F.create_map(*pairs)[F.col("doc")]
+
+
+def _cuis_mode(specs: list[OntologySpec]) -> Column:
+    return _per_doc([s.load_on_cuis for s in specs])
+
+
+def _doc_ids(
+    specs: list[OntologySpec], key: Column, key_of: Callable[[OntologySpec], str]
+) -> Column:
+    """``doc`` of every document whose ``key_of(spec)`` equals ``key``,
+    exploded (driver-built literal map, no join): a SAB listed twice
+    maps its rows to both documents; rows of other keys drop out."""
+    docs: dict[str, list[int]] = {}
+    for i, s in enumerate(specs):
+        docs.setdefault(key_of(s), []).append(i)
+    pairs = [
+        x
+        for k, ids in sorted(docs.items())
+        for x in (F.lit(k), F.array(*[F.lit(i) for i in ids]))
+    ]
+    return F.explode(F.create_map(*pairs)[key])
+
+
+def _sabs(specs: list[OntologySpec]) -> list[str]:
+    return sorted({s.code for s in specs})
+
+
+def _tag_docs(df: DataFrame, specs: list[OntologySpec]) -> DataFrame:
+    """Rows of ``df`` for the batch's SABs, each with its ``doc``."""
+    return df.where(F.col("SAB").isin(_sabs(specs))).withColumn(
+        "doc", _doc_ids(specs, F.col("SAB"), lambda s: s.code)
+    )
+
+
+def filter_atoms(mrconso: DataFrame, specs: list[OntologySpec]) -> DataFrame:
+    """MRCONSO scan for the batch: SAB/LAT/SUPPRESS filters pushed to
+    the source (load_tables at umls2rdf.py:598-605), ``doc`` and the
+    class key column ``code`` (CODE or CUI, get_code at
+    umls2rdf.py:142)."""
     # case-insensitive LAT match: the reference lowercases MRSAB.LAT
     # and relies on MySQL's case-insensitive collation
     # (umls2rdf.py:594-599); Spark compares case-sensitively.
-    atoms = mrconso.where(
-        (F.col("SAB") == ont_code)
-        & (F.lower(F.col("LAT")) == lat.lower())
-        & (F.col("SUPPRESS") == "N")
+    atoms = _tag_docs(mrconso.where(F.col("SUPPRESS") == "N"), specs).where(
+        F.lower(F.col("LAT")) == _per_doc([s.lat.lower() for s in specs])
     )
-    code = F.col("CUI") if load_on_cuis else F.col("CODE")
+    code = F.when(_cuis_mode(specs), F.col("CUI")).otherwise(F.col("CODE"))
     return atoms.withColumn("code", code).where(
         F.col("code").isNotNull() & (F.col("code") != "")
     )
 
 
-def root_cuis(mrconso: DataFrame, ont_code: str) -> DataFrame:
-    """SRC 'V-<ont>' atoms → root CUI set (umls2rdf.py:612-617)."""
+def root_cuis(mrconso: DataFrame, specs: list[OntologySpec]) -> DataFrame:
+    """SRC 'V-<SAB>' atoms → (doc, __root_cui) (umls2rdf.py:612-617)."""
     return (
         mrconso.where(
-            (F.col("SAB") == "SRC") & (F.col("CODE") == f"V-{ont_code}")
+            (F.col("SAB") == "SRC")
+            & F.col("CODE").isin([f"V-{s}" for s in _sabs(specs)])
         )
-        .select(F.col("CUI").alias("root_cui"))
+        .select(
+            _doc_ids(specs, F.col("CODE"), lambda s: f"V-{s.code}").alias("doc"),
+            F.col("CUI").alias("__root_cui"),
+        )
         .distinct()
     )
 
 
-def pref_labels(
-    atoms: DataFrame, mrrank: DataFrame, ont_code: str, load_on_cuis: bool
+def class_labels(
+    atoms: DataFrame, mrrank: DataFrame, specs: list[OntologySpec]
 ) -> DataFrame:
-    """One preferred label per code.
+    """One row per (doc, code): preferred label, sorted alt labels
+    (distinct STR != prefLabel) and sorted CUIs, from one aggregate.
 
     Code mode (umls2rdf.py:320-332): max MRRANK rank wins, fallback
     'P' in TTY. Cuis mode (umls2rdf.py:295-319): ISPREF='Y' →
-    STT='PF' → TTY starts with 'P' cascade. Both collapse to one
-    window top-1 with a multi-key ordering; AUI breaks the ties the
-    reference leaves to MySQL row order.
+    STT='PF' → TTY starts with 'P' cascade. Both are one min() over a
+    per-row sort key; AUI (then STR) breaks the ties the reference
+    leaves to MySQL row order.
     """
-    from pyspark.sql import Window
+    rank = (
+        mrrank.where(F.col("SAB").isin(_sabs(specs)))
+        # a duplicated (SAB, TTY) rank row must not fan out the atom
+        # side through the join (the reference indexes
+        # rank_by_tty[tty][0], i.e. first row wins)
+        .groupBy("SAB", "TTY")
+        .agg(F.max(F.col("RANK").cast("int")).alias("__rank"))
+    )
+    ranked = atoms.join(F.broadcast(rank), on=["SAB", "TTY"], how="left")
+    cuis = _cuis_mode(specs)
 
-    if load_on_cuis:
-        order = [
-            F.when(F.col("ISPREF") == "Y", 0).otherwise(1).asc(),
-            F.when(F.col("STT") == "PF", 0).otherwise(1).asc(),
-            F.when(F.col("TTY").startswith("P"), 0).otherwise(1).asc(),
-            F.col("AUI").asc(),
-        ]
-        ranked = atoms
-    else:
-        rank_dim = (
-            mrrank.where(F.col("SAB") == ont_code)
-            .select(
-                F.col("TTY"), F.col("RANK").cast("int").alias("tty_rank")
-            )
-            # guard: a duplicated (SAB, TTY) rank row must not fan out
-            # the atom side through the join (the reference indexes
-            # rank_by_tty[tty][0], i.e. first row wins)
-            .groupBy("TTY")
-            .agg(F.max("tty_rank").alias("tty_rank"))
-        )
-        ranked = atoms.join(F.broadcast(rank_dim), on="TTY", how="left")
-        order = [
-            F.col("tty_rank").desc_nulls_last(),
-            F.when(F.col("TTY").contains("P"), 0).otherwise(1).asc(),
-            F.col("AUI").asc(),
-        ]
-    w = Window.partitionBy("code").orderBy(*order)
+    def flag(cond: Column) -> Column:
+        return F.when(cond, 0).otherwise(1)
+
+    # code mode: rank descending, nulls last
+    key = F.struct(
+        F.when(cuis, flag(F.col("ISPREF") == "Y"))
+        .otherwise(flag(F.col("__rank").isNotNull()))
+        .alias("k0"),
+        F.when(cuis, flag(F.col("STT") == "PF"))
+        .otherwise(-F.col("__rank"))
+        .alias("k1"),
+        F.when(cuis, flag(F.col("TTY").startswith("P")))
+        .otherwise(flag(F.col("TTY").contains("P")))
+        .alias("k2"),
+        F.col("AUI"),
+        F.col("STR"),
+    )
+    best = F.col("__best")["STR"]
     return (
-        ranked.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .select("code", F.col("STR").alias("pref_label"))
-    )
-
-
-def source_resolved_rels(
-    mrrel: DataFrame, atoms: DataFrame, ont_code: str, load_on_cuis: bool
-) -> DataFrame:
-    """Rels with the SOURCE endpoint resolved to a class code but the
-    target still unresolved — the stage at which the reference checks
-    root-ness (terms() at umls2rdf.py:689-713 runs the cui_roots test
-    before the target-code checks, so rels pointing at out-of-ontology
-    atoms, e.g. the SRC hierarchy root, still count)."""
-    rels = mrrel.where(
-        (F.col("SAB") == ont_code) & (F.col("SUPPRESS") == "N")
-    ).select("CUI1", "AUI1", "REL", "CUI2", "AUI2", "RELA")
-    if load_on_cuis:
-        return rels.select(
-            F.col("CUI2").alias("code"), "REL", "RELA", "CUI1", "AUI1"
+        ranked.groupBy("doc", "code")
+        .agg(
+            F.min(key).alias("__best"),
+            F.collect_set("STR").alias("__strs"),
+            F.array_sort(F.collect_set("CUI")).alias("cuis"),
         )
-    bridge = atoms.select(F.col("AUI"), F.col("code")).dropDuplicates(["AUI"])
-    src = bridge.select(
-        F.col("AUI").alias("__aui2"), F.col("code").alias("code")
-    )
-    return rels.join(src, rels["AUI2"] == F.col("__aui2"), "inner").select(
-        "code", "REL", "RELA", "CUI1", "AUI1"
-    )
-
-
-def resolved_rels(
-    mrrel: DataFrame, atoms: DataFrame, ont_code: str, load_on_cuis: bool
-) -> DataFrame:
-    """Per-class relations with BOTH endpoint codes.
-
-    Code mode: AUI2→source code, AUI1→target code through the atom
-    bridge, self-maps dropped (terms() at umls2rdf.py:698-727).
-    Cuis mode: CUI2/CUI1 are already the codes (umls2rdf.py:692-697).
-    Returns (code, REL, RELA, CUI1, target_code).
-    """
-    src_resolved = source_resolved_rels(mrrel, atoms, ont_code, load_on_cuis)
-    if load_on_cuis:
-        return src_resolved.select(
-            "code", "REL", "RELA", "CUI1", F.col("CUI1").alias("target_code")
+        .select(
+            "doc",
+            "code",
+            best.alias("pref_label"),
+            F.array_sort(
+                F.filter(F.col("__strs"), lambda s: s != best)
+            ).alias("alt_labels"),
+            "cuis",
         )
-    bridge = atoms.select(F.col("AUI"), F.col("code")).dropDuplicates(["AUI"])
-    tgt = bridge.select(
-        F.col("AUI").alias("__aui1"), F.col("code").alias("target_code")
     )
-    return (
-        src_resolved.join(
-            tgt, src_resolved["AUI1"] == F.col("__aui1"), "inner"
-        )
-        .where(F.col("code") != F.col("target_code"))
-        .select("code", "REL", "RELA", "CUI1", "target_code")
-    )
+
+
+def _key_bridge(atoms: DataFrame, specs: list[OntologySpec]) -> DataFrame:
+    """(doc, __key, __code): the atom key → class code bridge — AUI in
+    code mode, CUI (= the code) in cuis mode."""
+    key = F.when(_cuis_mode(specs), F.col("CUI")).otherwise(F.col("AUI"))
+    return atoms.select(
+        "doc", key.alias("__key"), F.col("code").alias("__code")
+    ).dropDuplicates(["doc", "__key"])
 
 
 def _fragment() -> Column:
@@ -187,131 +281,196 @@ def _fragment() -> Column:
     ).otherwise(F.col("REL"))
 
 
+def relations(
+    tables: dict[str, DataFrame],
+    atoms: DataFrame,
+    specs: list[OntologySpec],
+) -> DataFrame:
+    """Rels with the SOURCE endpoint resolved to a class code and the
+    target resolved where possible: (doc, code, REL, RELA, CUI1,
+    target_code, resolved).
+
+    Code mode: AUI2→source code and AUI1→target code through the atom
+    bridge, self-maps unresolved (terms() at umls2rdf.py:698-727).
+    Cuis mode: CUI2/CUI1 are already the codes (umls2rdf.py:692-697).
+    Rows whose target is not resolved stay: the reference tests
+    root-ness before the target-code checks (umls2rdf.py:689-713), so
+    rels pointing at out-of-ontology atoms, e.g. the SRC hierarchy
+    root, still count for it.
+    """
+    cuis = _cuis_mode(specs)
+    bridge = _key_bridge(atoms, specs)
+
+    def resolve(rels: DataFrame, cui: str, aui: str, out: str) -> DataFrame:
+        keyed = rels.withColumn(
+            "__key", F.when(cuis, F.col(cui)).otherwise(F.col(aui))
+        )
+        return (
+            keyed.join(bridge, on=["doc", "__key"], how="left")
+            .withColumn(out, F.when(cuis, F.col(cui)).otherwise(F.col("__code")))
+            .drop("__key", "__code")
+        )
+
+    rels = _tag_docs(
+        tables["MRREL"].where(F.col("SUPPRESS") == "N"), specs
+    ).select("doc", "CUI1", "AUI1", "REL", "CUI2", "AUI2", "RELA")
+    src = resolve(rels, "CUI2", "AUI2", "code").where(
+        cuis | F.col("code").isNotNull()
+    )
+    both = resolve(src, "CUI1", "AUI1", "target_code")
+    resolved = cuis | (
+        F.col("target_code").isNotNull()
+        & (F.col("code") != F.col("target_code"))
+    )
+    return both.select(
+        "doc", "code", "REL", "RELA", "CUI1", "target_code",
+        resolved.alias("resolved"),
+    )
+
+
+def _emit_obj(specs: list[OntologySpec]) -> Column:
+    """Rels rendered as object-property triples (umls2rdf.py:447-451)."""
+    return (F.col("REL") != "PAR") & ~(
+        (F.col("REL") == "CHD") & _per_doc([s.hierarchy for s in specs])
+    )
+
+
+def _attributes(
+    mrsat: DataFrame, specs: list[OntologySpec]
+) -> DataFrame:
+    """(doc, code, ATN, ATV) MRSAT rows keyed like the classes."""
+    cuis = _cuis_mode(specs)
+    # the reference filters CODE IS NOT NULL even when keying by CUI
+    # (mrsat_filt at umls2rdf.py:643); the key column is additionally
+    # non-null/non-empty so rows land on a class.
+    atts = _tag_docs(
+        mrsat.where(F.col("CODE").isNotNull() & (F.col("ATN") != "AQ")),
+        specs,
+    ).withColumn("code", F.when(cuis, F.col("CUI")).otherwise(F.col("CODE")))
+    return atts.where(
+        F.col("code").isNotNull() & (F.col("code") != "")
+    ).select("doc", "code", "ATN", "ATV")
+
+
 def term_blocks(
     tables: dict[str, DataFrame],
-    ont_code: str,
-    ns: str,
+    ontologies: str | Sequence[OntologySpec],
+    ns: str | None = None,
     lat: str = "eng",
     load_on_cuis: bool = False,
     hierarchy: bool = True,
     tree: DataFrame | None = None,
     dedupe: bool = True,
 ) -> DataFrame:
-    """(code, ttl) — one rendered Turtle class block per code,
-    byte-compatible with UmlsClass.toRDF (umls2rdf.py:391-490).
+    """(doc, code, ttl) — one rendered Turtle class block per class of
+    every document, byte-compatible with UmlsClass.toRDF
+    (umls2rdf.py:391-490).
 
-    ``tree`` is the (parent, child) mesh tree for MSH-style exports
-    (tree parents emitted instead of CHD rels, hierarchy=False).
+    ``ontologies`` is a list of OntologySpec (doc = its index), or one
+    SAB whose settings are the keyword arguments (doc 0). ``tree`` is
+    the (parent, child) mesh tree used by the ``mesh_tree`` documents
+    (tree parents emitted instead of CHD rels); a batch with such a
+    document derives it from MRREL/MRCONSO when not given.
     """
-    lang = UMLS_LANGCODE_MAP[lat.lower()]
+    specs = _specs(
+        ontologies, ns, lat, load_on_cuis, hierarchy, tree is not None
+    )
+    tree_docs = [i for i, s in enumerate(specs) if s.mesh_tree]
+    if tree is None and tree_docs:
+        tree = mesh_tree(tables["MRREL"], tables["MRCONSO"])
+    ns_col = _per_doc([s.ns for s in specs])
+    lang = _per_doc([s.lang for s in specs])
+    hier = _per_doc([s.hierarchy for s in specs])
+    in_tree = _per_doc([s.mesh_tree for s in specs])
+    cuis_mode = _cuis_mode(specs)
+    icd = _per_doc([s.code == "ICD10CM" for s in specs])
+
     mrconso = tables["MRCONSO"]
-    atoms = filter_atoms(mrconso, ont_code, lat, load_on_cuis)
-    pref = pref_labels(
-        atoms, tables.get("MRRANK", _empty_like(mrconso, "RANK SAB TTY SUPPRESS")),
-        ont_code, load_on_cuis,
-    )
-    roots = root_cuis(mrconso, ont_code)
+    atoms = filter_atoms(mrconso, specs)
+    mrrank = tables.get("MRRANK", _empty_like(mrconso, "RANK SAB TTY SUPPRESS"))
+    classes = class_labels(atoms, mrrank, specs)
 
-    # ── alt labels: sorted distinct STR != prefLabel ────────────────
-    alts = (
-        atoms.join(pref, "code")
-        .where(F.col("STR") != F.col("pref_label"))
-        .groupBy("code")
-        .agg(F.array_sort(F.collect_set("STR")).alias("alt_labels"))
-    )
-
-    # ── definitions: join by AUI (code mode) / CUI (cuis mode) ─────
+    # ── definitions: joined by AUI (code mode) / CUI (cuis mode) ────
     mrdef = tables.get("MRDEF")
     if mrdef is not None:
-        defkey = "CUI" if load_on_cuis else "AUI"
         defs = (
-            mrdef.where(F.col("SAB") == ont_code)
-            .join(
-                atoms.select(defkey, "code").dropDuplicates([defkey, "code"]),
-                on=defkey,
+            _tag_docs(mrdef, specs)
+            .withColumn(
+                "__key",
+                F.when(cuis_mode, F.col("CUI")).otherwise(F.col("AUI")),
             )
-            .groupBy("code")
+            .join(_key_bridge(atoms, specs), on=["doc", "__key"])
+            .groupBy("doc", F.col("__code").alias("code"))
             .agg(F.array_sort(F.collect_set("DEF")).alias("defs"))
         )
     else:
         defs = None
 
-    # ── relations: classified, ordered, rendered ────────────────────
-    rels = resolved_rels(tables["MRREL"], atoms, ont_code, load_on_cuis)
+    # ── relations: classified, ordered, rendered; root flag ─────────
     # root detection (umls2rdf.py:692-713): CHD rel whose CUI1 is a
     # root CUI (code mode requires REL='CHD'; cuis mode any rel);
-    # ICD10CM's patched root parent included. Checked on the
-    # SOURCE-resolved rels — the reference tests root-ness before the
-    # target-code checks, so rels pointing at out-of-ontology atoms
-    # (the SRC hierarchy root itself) still count.
-    src_rels = source_resolved_rels(
-        tables["MRREL"], atoms, ont_code, load_on_cuis
+    # ICD10CM's patched root parent included; checked on every
+    # source-resolved rel.
+    roots = root_cuis(mrconso, specs).select(
+        "doc", F.col("__root_cui").alias("CUI1"), F.lit(True).alias("__root")
     )
-    root_cond = F.col("__is_root_cui").isNotNull()
-    if not load_on_cuis:
-        root_cond = root_cond & (F.col("REL") == "CHD")
-        if ont_code == "ICD10CM":
-            root_cond = root_cond | (
-                (F.col("CUI1") == "C3264380") & (F.col("REL") == "CHD")
-            )
-    rels_flagged = src_rels.join(
-        F.broadcast(roots.withColumn("__is_root_cui", F.lit(1))),
-        src_rels["CUI1"] == F.col("root_cui"),
-        "left",
+    rels = relations(tables, atoms, specs).join(
+        F.broadcast(roots), on=["doc", "CUI1"], how="left"
     )
-    is_root = rels_flagged.where(root_cond).select("code").distinct().withColumn(
-        "is_root", F.lit(True)
+    chd = F.col("REL") == "CHD"
+    is_root = (F.col("__root").isNotNull() & (cuis_mode | chd)) | (
+        ~cuis_mode & icd & chd & (F.col("CUI1") == ICD10CM_ROOT_CUI)
     )
-
     emit_sub = (
-        (F.col("REL") == "CHD")
-        & F.lit(hierarchy)
-        & F.lit(tree is None)
-        & ~F.col("target_code").isin(*BOGUS_PARENTS)
+        chd & hier & ~in_tree & ~F.col("target_code").isin(*BOGUS_PARENTS)
     )
-    emit_obj = (F.col("REL") != "PAR") & ~(
-        (F.col("REL") == "CHD") & F.lit(hierarchy)
-    )
-    rendered_rel = F.when(
-        emit_sub, subclass_triple(url_term(ns, F.col("target_code")))
-    ).when(
-        emit_obj,
-        object_triple(
-            url_term(ns, _fragment()), url_term(ns, F.col("target_code"))
+    target = url_term(ns_col, F.col("target_code"))
+    seg = F.when(
+        F.col("resolved"),
+        F.when(emit_sub, subclass_triple(target)).when(
+            _emit_obj(specs),
+            object_triple(url_term(ns_col, _fragment()), target),
         ),
     )
-    rel_segments = (
-        rels.withColumn("__seg", rendered_rel)
-        .where(F.col("__seg").isNotNull())
-        .groupBy("code")
+    rel_part = (
+        rels.withColumn("__seg", seg)
+        .groupBy("doc", "code")
         .agg(
             F.transform(
                 F.array_sort(
                     F.collect_list(
-                        F.struct(
-                            F.when(F.col("REL") == "CHD", 0)
-                            .otherwise(1)
-                            .alias("k1"),
-                            _fragment().alias("k2"),
-                            F.col("target_code").alias("k3"),
-                            F.col("code").alias("k4"),
-                            F.col("__seg").alias("seg"),
+                        F.when(
+                            F.col("__seg").isNotNull(),
+                            F.struct(
+                                F.when(chd, 0).otherwise(1).alias("k1"),
+                                _fragment().alias("k2"),
+                                F.col("target_code").alias("k3"),
+                                F.col("code").alias("k4"),
+                                F.col("__seg").alias("seg"),
+                            ),
                         )
                     )
                 ),
                 lambda s: s["seg"],
-            ).alias("rel_segs")
+            ).alias("rel_segs"),
+            F.max(is_root).alias("is_root"),
         )
     )
+
     # ── tree parents (MSH mesh tree, umls2rdf.py:423-426) ──────────
     if tree is not None:
         tree_segments = (
             tree.groupBy(F.col("child").alias("code"))
             .agg(F.array_sort(F.collect_set("parent")).alias("parents"))
+            .withColumn(
+                "doc", F.explode(F.array(*[F.lit(i) for i in tree_docs]))
+            )
             .select(
+                "doc",
                 "code",
                 F.transform(
-                    F.col("parents"), lambda p: subclass_triple(url_term(ns, p))
+                    F.col("parents"),
+                    lambda p: subclass_triple(url_term(ns_col, p)),
                 ).alias("tree_segs"),
             )
         )
@@ -319,40 +478,24 @@ def term_blocks(
         tree_segments = None
 
     # ── attributes (umls2rdf.py:457-474) ────────────────────────────
+    # rows of codes outside the class set drop out at the left join
+    # onto the classes below
     mrsat = tables.get("MRSAT")
     if mrsat is not None:
-        attkey = "CUI" if load_on_cuis else "CODE"
-        # the reference filters CODE IS NOT NULL even when keying by
-        # CUI (mrsat_filt at umls2rdf.py:643); the key column is
-        # additionally non-null/non-empty so rows land on a class.
-        atts = mrsat.where(
-            (F.col("SAB") == ont_code)
-            & F.col("CODE").isNotNull()
-            & F.col(attkey).isNotNull()
-            & (F.col(attkey) != "")
-            & (F.col("ATN") != "AQ")
-        ).select(F.col(attkey).alias("code"), "ATN", "ATV")
-        atts = atts.join(
-            atoms.select("code").distinct(), on="code", how="left_semi"
-        )
         mn_root = (
-            F.lit(tree is not None)
+            in_tree
             & (F.col("ATN") == "MN")
             & F.col("code").startswith("D")
             & (F.size(F.split(F.col("ATV"), "\\.")) == 1)
         )
+        att = literal_triple(url_term(ns_col, F.col("ATN")), F.col("ATV"))
         att_arr = F.when(
-            mn_root,
-            F.array(
-                F.lit(_OWL_THING_SUB),
-                literal_triple(url_term(ns, F.col("ATN")), F.col("ATV")),
-            ),
-        ).otherwise(
-            F.array(literal_triple(url_term(ns, F.col("ATN")), F.col("ATV")))
-        )
+            mn_root, F.array(F.lit(_OWL_THING_SUB), att)
+        ).otherwise(F.array(att))
         att_segments = (
-            atts.withColumn("__segs", att_arr)
-            .groupBy("code")
+            _attributes(mrsat, specs)
+            .withColumn("__segs", att_arr)
+            .groupBy("doc", "code")
             .agg(
                 F.flatten(
                     F.transform(
@@ -373,57 +516,44 @@ def term_blocks(
     else:
         att_segments = None
 
-    # ── semantic types: CUIs + TUIs per code (umls2rdf.py:477-488) ──
-    cuis = atoms.groupBy("code").agg(
-        F.array_sort(F.collect_set("CUI")).alias("cuis")
-    )
+    # ── semantic types: TUIs per class (umls2rdf.py:477-488) ────────
     mrsty = tables.get("MRSTY")
     if mrsty is not None:
+        # duplicate (CUI, TUI) pairs fold into the set
         tuis = (
-            atoms.select("code", "CUI")
-            .distinct()
-            .join(mrsty.select("CUI", "TUI").distinct(), on="CUI")
-            .groupBy("code")
+            atoms.select("doc", "code", "CUI")
+            .join(mrsty.select("CUI", "TUI"), on="CUI")
+            .groupBy("doc", "code")
             .agg(F.array_sort(F.collect_set("TUI")).alias("tuis"))
         )
     else:
         tuis = None
 
-    # ── assemble one row per code ───────────────────────────────────
-    base = pref
-    for part in (alts, defs, rel_segments, tree_segments, att_segments,
-                 cuis, tuis, is_root):
+    # ── assemble one row per (doc, code) ────────────────────────────
+    base = classes
+    for part in (defs, rel_part, tree_segments, att_segments, tuis):
         if part is not None:
-            base = base.join(part, on="code", how="left")
+            base = base.join(part, on=["doc", "code"], how="left")
     empty_arr = F.array().cast("array<string>")
-    base = (
-        base.withColumn("alt_labels", F.coalesce(F.col("alt_labels"), empty_arr))
-        .withColumn(
-            "defs",
-            F.coalesce(F.col("defs"), empty_arr) if defs is not None else empty_arr,
-        )
-        .withColumn("rel_segs", F.coalesce(F.col("rel_segs"), empty_arr))
-        .withColumn(
-            "tree_segs",
-            F.coalesce(F.col("tree_segs"), empty_arr)
-            if tree_segments is not None
-            else empty_arr,
-        )
-        .withColumn(
-            "att_segs",
-            F.coalesce(F.col("att_segs"), empty_arr)
-            if att_segments is not None
-            else empty_arr,
-        )
-        .withColumn("cuis", F.coalesce(F.col("cuis"), empty_arr))
-        .withColumn(
-            "tuis",
-            F.coalesce(F.col("tuis"), empty_arr) if tuis is not None else empty_arr,
-        )
-        .withColumn("is_root", F.coalesce(F.col("is_root"), F.lit(False)))
+
+    def arr(name: str, part: DataFrame | None) -> Column:
+        return F.coalesce(F.col(name), empty_arr) if part is not None else empty_arr
+
+    base = base.select(
+        "doc",
+        "code",
+        "pref_label",
+        "alt_labels",
+        "cuis",
+        arr("defs", defs).alias("defs"),
+        arr("rel_segs", rel_part).alias("rel_segs"),
+        arr("tree_segs", tree_segments).alias("tree_segs"),
+        arr("att_segs", att_segments).alias("att_segs"),
+        arr("tuis", tuis).alias("tuis"),
+        F.coalesce(F.col("is_root"), F.lit(False)).alias("is_root"),
     )
 
-    url = url_term(ns, F.col("code"))
+    url = url_term(ns_col, F.col("code"))
     header = class_header(url, F.col("pref_label"), F.col("code"), lang)
     alt_part = F.when(
         F.size("alt_labels") > 0,
@@ -498,7 +628,7 @@ def term_blocks(
         sty_lines,
         F.lit(" .\n\n"),
     )
-    return base.select("code", block.alias("ttl"))
+    return base.select("doc", "code", block.alias("ttl"))
 
 
 def mesh_tree(mrrel: DataFrame, mrconso: DataFrame) -> DataFrame:
@@ -582,9 +712,9 @@ def semantic_types_lines(
         root_lines = (
             nodes.join(has_parent, on="TUI", how="left_anti")
             .select(
-                F.concat(F.lit("1:"), F.col("TUI"), F.lit(":~")).alias(
-                    "sort_key"
-                ),
+                F.concat(
+                    F.lit("1:"), F.col("TUI"), F.lit(_STY_ROOT_SUFFIX)
+                ).alias("sort_key"),
                 F.concat(
                     F.lit(f"<{sty_url}"), F.col("TUI"),
                     F.lit("> rdfs:subClassOf owl:Thing ."),
@@ -595,48 +725,46 @@ def semantic_types_lines(
     return out
 
 
+
+
 def used_properties(
     tables: dict[str, DataFrame],
-    ont_code: str,
+    ontologies: str | Sequence[OntologySpec],
     lat: str = "eng",
     load_on_cuis: bool = False,
     hierarchy: bool = True,
 ) -> DataFrame:
-    """Distinct property names an export will emit: object-property
-    fragments from rels + datatype ATNs from atts (the ont_properties
-    dict the reference accumulates per term, umls2rdf.py:453-474).
-    Returns (att) one column."""
-    atoms = filter_atoms(tables["MRCONSO"], ont_code, lat, load_on_cuis)
-    rels = resolved_rels(tables["MRREL"], atoms, ont_code, load_on_cuis)
-    emit_obj = (F.col("REL") != "PAR") & ~(
-        (F.col("REL") == "CHD") & F.lit(hierarchy)
+    """Distinct (doc, att) property names each document will emit:
+    object-property fragments from rels + datatype ATNs from atts (the
+    ont_properties dict the reference accumulates per term,
+    umls2rdf.py:453-474). ``ontologies`` as in term_blocks."""
+    specs = _specs(ontologies, None, lat, load_on_cuis, hierarchy, False)
+    atoms = filter_atoms(tables["MRCONSO"], specs)
+    frags = (
+        relations(tables, atoms, specs)
+        .where(F.col("resolved") & _emit_obj(specs))
+        .select("doc", _fragment().alias("att"))
+        .distinct()
     )
-    frags = rels.where(emit_obj).select(_fragment().alias("att")).distinct()
     mrsat = tables.get("MRSAT")
     if mrsat is None:
         return frags
-    attkey = "CUI" if load_on_cuis else "CODE"
     atns = (
-        mrsat.where(
-            (F.col("SAB") == ont_code)
-            & F.col("CODE").isNotNull()  # umls2rdf.py:643, both modes
-            & F.col(attkey).isNotNull()
-            & (F.col(attkey) != "")
-            & (F.col("ATN") != "AQ")
-        )
-        .select(F.col("ATN").alias("att"))
+        _attributes(mrsat, specs)
+        .select("doc", F.col("ATN").alias("att"))
         .distinct()
     )
     return frags.unionByName(atns).distinct()
 
 
 def property_blocks(
-    mrdoc: DataFrame, props: DataFrame, ns: str
+    mrdoc: DataFrame, props: DataFrame, ns: Column | str
 ) -> DataFrame:
     """Rendered owl property declarations (UmlsAttribute.toRDF at
     umls2rdf.py:511-532 + MRDOC digestion at umls2rdf.py:853-864).
 
-    ``props``: one 'att' column of property names used by the export.
+    ``props``: an 'att' column of property names used by the export
+    (plus any key columns, e.g. ``doc``, kept in the output).
     Properties lacking an expanded_form are dropped (the reference
     raises; at scale we surface them by anti-join instead of failing
     the export).
@@ -678,8 +806,135 @@ def property_blocks(
         tq(label), F.lit(";\n\trdfs:comment "), tq(desc), F.lit(" .\n\n"),
     )
     return joined.where(ptype.isNotNull()).select(
-        F.col("att"), block.alias("ttl")
+        *props.columns, block.alias("ttl")
     )
+
+
+def ontology_documents(
+    tables: dict[str, DataFrame],
+    specs: Sequence[OntologySpec],
+    include_semantic_types: bool = True,
+    semantic_types_doc: bool = False,
+) -> DataFrame:
+    """(doc, sort, ttl): every document of a batch as one frame
+    (write_into at umls2rdf.py:745-789). Document ``i`` is ``specs[i]``:
+    its header, class blocks, the hasSTY declaration, its property
+    declarations and (``include_semantic_types``) the semantic-type
+    lines. With ``semantic_types_doc`` document ``len(specs)`` is the
+    umls_semantictypes document (generate_semantic_types,
+    umls2rdf.py:153-189), which adds the owl:Thing root lines. Order
+    each document by ``sort``; the semantic-type lines are built once
+    for all documents.
+    """
+    spark = tables["MRCONSO"].sparkSession
+    specs = list(specs)
+    n = len(specs)
+    has_sty = "MRSTY" in tables
+    semantic_types_doc = semantic_types_doc and has_sty
+    # hasSTY ObjectProperty declaration first in the property section
+    # (write_properties, umls2rdf.py:801-811): sort key "2" < "2:…".
+    fixed = [
+        row
+        for i, s in enumerate(specs)
+        for row in ((i, "0", s.header), (i, "2", HASSTY_PROPERTY_BLOCK))
+    ]
+    if semantic_types_doc:
+        fixed.append((n, "0", PREFIXES))
+    parts = [spark.createDataFrame(fixed, "doc int, sort string, ttl string")]
+    if specs:
+        parts.append(
+            term_blocks(tables, specs).select(
+                "doc", F.concat(F.lit("1:"), F.col("code")).alias("sort"), "ttl"
+            )
+        )
+        if "MRDOC" in tables:
+            props = property_blocks(
+                tables["MRDOC"], used_properties(tables, specs),
+                _per_doc([s.ns for s in specs]),
+            )
+            parts.append(
+                props.select(
+                    "doc", F.concat(F.lit("2:"), F.col("att")).alias("sort"),
+                    "ttl",
+                )
+            )
+    sty_docs = list(range(n)) if include_semantic_types and has_sty else []
+    if semantic_types_doc:
+        sty_docs.append(n)
+    if sty_docs:
+        lines = semantic_types_lines(
+            tables["MRSTY"], with_roots=semantic_types_doc
+        )
+        docs = F.when(
+            F.col("sort_key").endswith(_STY_ROOT_SUFFIX), F.array(F.lit(n))
+        ).otherwise(F.array(*[F.lit(d) for d in sty_docs]))
+        parts.append(
+            lines.withColumn("doc", F.explode(docs)).select(
+                "doc",
+                F.when(F.col("doc") == n, F.col("sort_key"))
+                .otherwise(F.concat(F.lit("3:"), F.col("sort_key")))
+                .alias("sort"),
+                F.col("line").alias("ttl"),
+            )
+        )
+    doc = parts[0]
+    for p in parts[1:]:
+        doc = doc.unionByName(p)
+    return doc
+
+
+def assemble_document(doc: DataFrame, ordered: bool) -> DataFrame:
+    """Final ordering stage of the export, factored out so plan
+    audits can assert the scale mode introduces NO Sort Exchange
+    (sortWithinPartitions = in-partition sort only; the ordered mode
+    pays a rangepartitioning Exchange for byte-stable output). Orders
+    by (doc, sort) — ``doc`` when present — and drops ``sort``."""
+    keys = [c for c in ("doc", "sort") if c in doc.columns]
+    if ordered:
+        doc = doc.orderBy(*keys)
+    else:
+        doc = doc.sortWithinPartitions(*keys)
+    return doc.drop("sort")
+
+
+def write_documents(
+    docs: DataFrame, paths: Sequence[str], ordered: bool = True
+) -> None:
+    """Write a batch from ``ontology_documents``: document ``i`` to the
+    directory ``paths[i]`` (text part files + ``_SUCCESS``).
+
+    One write, partitioned by ``doc``, goes to a staging directory
+    next to ``paths[0]`` (paths share a filesystem); once it commits,
+    each ``doc=<i>`` directory replaces ``paths[i]``. A failed write
+    leaves no document behind. ``df.write.text`` streams per
+    partition — no driver collect — so a 100 TB export writes at
+    cluster width. Blocks are ordered by code (the reference emits in
+    dict-insertion order, which is DB-scan order — not reproducible;
+    RDF semantics are order-free).
+
+    ``ordered=True`` (default) totally orders each document — stable
+    byte-identical output, but a full range-partitioning Exchange
+    purely for cosmetics. ``ordered=False`` is the scale mode: blocks
+    are sorted only WITHIN partitions (no Sort Exchange at all), each
+    part file is still internally tidy and the triple SET is
+    identical; use it for 100 TB exports where a global sort of the
+    document text would dominate the job."""
+    parent = os.path.dirname(os.path.abspath(paths[0]))
+    os.makedirs(parent, exist_ok=True)
+    staging = tempfile.mkdtemp(prefix="_staging-", dir=parent)
+    try:
+        assemble_document(docs, ordered).write.mode("overwrite").partitionBy(
+            "doc"
+        ).text(staging)
+        for i, path in enumerate(paths):
+            if os.path.isdir(path):
+                shutil.rmtree(path)
+            elif os.path.exists(path):
+                os.remove(path)
+            os.replace(os.path.join(staging, f"doc={i}"), path)
+            open(os.path.join(path, "_SUCCESS"), "w").close()
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
 
 
 def write_ontology(
@@ -693,82 +948,21 @@ def write_ontology(
     umls_version: str = "2025AB",
     ordered: bool = True,
 ) -> None:
-    """Full document export (write_into at umls2rdf.py:745-789):
-    prefixes + ontology header + class blocks + property declarations
-    (+ semantic types), written with ``df.write.text`` — per-partition
-    streaming writes, no driver collect, so a 100 TB export writes at
-    cluster width. Blocks are ordered by code (the reference emits in
-    dict-insertion order, which is DB-scan order — not reproducible;
-    RDF semantics are order-free).
-
-    ``ordered=True`` (default) totally orders the document — stable
-    byte-identical output, but a full range-partitioning Exchange
-    purely for cosmetics. ``ordered=False`` is the scale mode: blocks
-    are sorted only WITHIN partitions (no Sort Exchange at all), each
-    part file is still internally tidy and the triple SET is
-    identical; use it for 100 TB exports where a global sort of the
-    document text would dominate the job."""
-    from umls2rdf_spark.rdf.turtle import PREFIXES
-
-    spark = tables["MRCONSO"].sparkSession
-    hierarchy = ont_code != "MSH"
-    tree = (
-        mesh_tree(tables["MRREL"], tables["MRCONSO"])
-        if ont_code == "MSH"
-        else None
-    )
+    """Full document export of one source: prefixes + ontology header
+    + class blocks + property declarations (+ semantic types) — the
+    one-entry batch of ontology_documents / write_documents."""
     rec = (
         mrsab_record(tables["MRSAB"], ont_code)
         if "MRSAB" in tables
         else None
     )
-    head = PREFIXES + ontology_header(rec, ont_code, ns, umls_version)
-    head_df = spark.createDataFrame([("0", head)], "sort string, ttl string")
-    blocks = term_blocks(
-        tables, ont_code, ns, lat=lat, load_on_cuis=load_on_cuis,
-        hierarchy=hierarchy, tree=tree,
-    ).select(F.concat(F.lit("1:"), F.col("code")).alias("sort"), "ttl")
-    parts = [head_df, blocks]
-    # hasSTY ObjectProperty declaration first in the property section
-    # (write_properties, umls2rdf.py:801-811): sort key "2" < "2:…".
-    parts.append(
-        spark.createDataFrame(
-            [("2", HASSTY_PROPERTY_BLOCK)], "sort string, ttl string"
-        )
+    spec = OntologySpec.from_conf(
+        ont_code, ns, lat, load_on_cuis, rec, umls_version
     )
-    if "MRDOC" in tables:
-        props = used_properties(
-            tables, ont_code, lat=lat, load_on_cuis=load_on_cuis,
-            hierarchy=hierarchy,
-        )
-        parts.append(
-            property_blocks(tables["MRDOC"], props, ns).select(
-                F.concat(F.lit("2:"), F.col("att")).alias("sort"), "ttl"
-            )
-        )
-    if include_semantic_types and "MRSTY" in tables:
-        parts.append(
-            semantic_types_lines(tables["MRSTY"], with_roots=False).select(
-                F.concat(F.lit("3:"), F.col("sort_key")).alias("sort"),
-                F.col("line").alias("ttl"),
-            )
-        )
-    doc = parts[0]
-    for p in parts[1:]:
-        doc = doc.unionByName(p)
-    assemble_document(doc, ordered).write.mode("overwrite").text(output_dir)
-
-
-def assemble_document(doc: DataFrame, ordered: bool) -> DataFrame:
-    """Final ordering stage of the export, factored out so plan
-    audits can assert the scale mode introduces NO Sort Exchange
-    (sortWithinPartitions = in-partition sort only; the ordered mode
-    pays a rangepartitioning Exchange for byte-stable output)."""
-    if ordered:
-        doc = doc.orderBy("sort")
-    else:
-        doc = doc.sortWithinPartitions("sort")
-    return doc.select("ttl")
+    docs = ontology_documents(
+        tables, [spec], include_semantic_types=include_semantic_types
+    )
+    write_documents(docs, [output_dir], ordered)
 
 
 def _empty_like(ref_df: DataFrame, cols: str) -> DataFrame:
@@ -787,7 +981,6 @@ def ontology_header(
     """Ontology header block (ONTOLOGY_HEADER at umls2rdf.py:30,
     write_into at umls2rdf.py:750-762). MRSAB is a one-row lookup —
     driver-side string assembly, not a Spark job."""
-    from umls2rdf_spark.rdf.turtle import PREFIXES  # noqa: F401
 
     def esc(s: str) -> str:
         return s.replace("\\", "\\\\").replace('"', '\\"')
@@ -820,17 +1013,26 @@ def ontology_header(
 """
 
 
-def mrsab_record(
-    mrsab: DataFrame, ont_code: str
-) -> dict | None:
-    """Preferred MRSAB row: CURVER='Y' first (get_mrsab_record at
-    umls2rdf.py:115-122), deterministic fallback by VSAB."""
-    rows = (
-        mrsab.where(F.col("RSAB") == ont_code)
-        .orderBy(
-            F.when(F.col("CURVER") == "Y", 0).otherwise(1), F.col("VSAB")
+def mrsab_records(mrsab: DataFrame, codes) -> dict[str, dict]:
+    """Preferred MRSAB row per RSAB in ``codes``, from one collect of
+    the small table: CURVER='Y' first (get_mrsab_record at
+    umls2rdf.py:115-122), deterministic fallback by VSAB (nulls
+    first, as Spark orders them)."""
+    rows = [
+        r.asDict()
+        for r in mrsab.where(F.col("RSAB").isin(sorted(set(codes)))).collect()
+    ]
+    rows.sort(
+        key=lambda r: (
+            r["CURVER"] != "Y", r["VSAB"] is not None, r["VSAB"] or ""
         )
-        .limit(1)
-        .collect()
     )
-    return rows[0].asDict() if rows else None
+    best: dict[str, dict] = {}
+    for r in rows:
+        best.setdefault(r["RSAB"], r)
+    return best
+
+
+def mrsab_record(mrsab: DataFrame, ont_code: str) -> dict | None:
+    """Preferred MRSAB row of one source (see mrsab_records)."""
+    return mrsab_records(mrsab, [ont_code]).get(ont_code)

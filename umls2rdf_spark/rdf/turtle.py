@@ -60,23 +60,29 @@ def subclass_triple(object_ref: Column) -> Column:
     return F.concat(F.lit("\trdfs:subClassOf "), rendered, F.lit(" ;\n"))
 
 
-def class_header(url: Column, pref_label: Column, code: Column, lang: str) -> Column:
+def _col(value: Column | str) -> Column:
+    return F.lit(value) if isinstance(value, str) else value
+
+
+def class_header(
+    url: Column, pref_label: Column, code: Column, lang: Column | str
+) -> Column:
     """Block opener: ``<url> a owl:Class ;`` + prefLabel + notation
     (umls2rdf.py:403-406)."""
     return F.concat(
         F.lit("<"), url, F.lit("> a owl:Class ;\n\tskos:prefLabel "),
-        tq(pref_label), F.lit(f"@{lang} ;\n\tskos:notation "),
-        tq(code), F.lit("^^xsd:string ;\n"),
+        tq(pref_label), F.lit("@"), _col(lang),
+        F.lit(" ;\n\tskos:notation "), tq(code), F.lit("^^xsd:string ;\n"),
     )
 
 
-def lang_literal_list(values: Column, lang: str) -> Column:
+def lang_literal_list(values: Column, lang: Column | str) -> Column:
     """``\"\"\"a\"\"\"@en , \"\"\"b\"\"\"@en`` from a sorted string array
     (altLabel/definition lists, umls2rdf.py:410-419)."""
     return F.concat_ws(
         " , ",
         F.transform(
-            values, lambda v: F.concat(tq(v), F.lit(f"@{lang}"))
+            values, lambda v: F.concat(tq(v), F.lit("@"), _col(lang))
         ),
     )
 
@@ -84,8 +90,7 @@ def lang_literal_list(values: Column, lang: str) -> Column:
 def simple_literal(value: Column | str) -> Column:
     """Plain quoted turtle string with escape (turtle_string at
     umls2rdf.py:106 for values without newlines)."""
-    v = F.lit(value) if isinstance(value, str) else value
-    return F.concat(F.lit('"'), rdf_escape(v), F.lit('"'))
+    return F.concat(F.lit('"'), rdf_escape(_col(value)), F.lit('"'))
 
 
 __all__ = [
